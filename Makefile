@@ -3,7 +3,7 @@
 PKG = bloomfilter_multithread_spark
 DIST = dist/$(PKG).zip
 
-.PHONY: dist submit-demo submit-demo-cluster probe-demo test bench clean
+.PHONY: dist submit-demo submit-demo-cluster probe-demo test bench perfbench clean
 
 dist:
 	mkdir -p dist
@@ -52,6 +52,19 @@ test:
 
 bench:
 	python bench.py
+
+# sketch-engine benchmark (BENCHMARK.json): both workloads at one seed,
+# first the end-to-end metrics (--trace 0), then the per-layer ones
+# (--trace 1, spans in .perfbench_trace/). Override with SEED=n BENCH_SECONDS=s.
+SEED ?= 1
+BENCH_SECONDS ?= 12
+perfbench:
+	for w in build_mixed probe_dedup; do \
+	  for t in 0 1; do \
+	    python3 perfbench/run.py --workload $$w --seed $(SEED) \
+	      --seconds $(BENCH_SECONDS) --trace $$t || exit 1; \
+	  done; \
+	done
 
 clean:
 	rm -rf dist

@@ -136,12 +136,12 @@ class TestBuildMergeProbe:
         exact = corpus.where("tool is not null").select("tool").distinct().count()
         assert abs(sk["h"].estimate() - exact) / max(exact, 1) < 0.1
 
-    def test_dedup_projection_shares_identical_exprs(self):
+    def test_dedup_projection_shares_identical_exprs(self, spark):
         """Specs over the same SQL string + same hash/value treatment ride
         ONE projected column (the headline build ships length(text) once
         for kll AND t-digest — 8 of 40 bytes/row across the exchange +
-        Arrow boundary saved); differing pre_hashed/value treatment or
-        Column objects never share."""
+        Arrow boundary saved); differing pre_hashed/value treatment never
+        shares, and a Column object never shares with a SQL string."""
         from bloomfilter_multithread_spark.operators.build import _dedup_projection
 
         specs = [
@@ -152,7 +152,7 @@ class TestBuildMergeProbe:
             # same string as 'b' but pre-hashed -> different expression
             SketchSpec("b2", "bloom", "text", {"m_bits": 1 << 16, "k": 3},
                        pre_hashed=True),
-            # Column objects have no stable identity -> never shared
+            # a Column object is keyed by identity, not by its SQL text
             SketchSpec("b3", "bloom", F.col("text"), {"m_bits": 1 << 16, "k": 3}),
         ]
         cols, index = _dedup_projection(specs)
@@ -160,6 +160,25 @@ class TestBuildMergeProbe:
         assert index["k"] == index["t"]
         assert index["b"] != index["b2"] != index["b3"]
         assert sorted(set(index.values())) == list(range(5))
+
+    def test_dedup_projection_column_object_value_vs_hash(self, spark, corpus):
+        """One Column object feeding a value sketch AND a hash sketch needs
+        two projected columns: the KLL's raw value and the HLL's hash.
+        Keyed by the object alone, the HLL was fed the KLL's raw values as
+        if they were hashes and estimated ~1 distinct value."""
+        from bloomfilter_multithread_spark.operators.build import _dedup_projection
+
+        turn = F.col("turn_idx")
+        kll = SketchSpec("k", "kll", turn, {"k": 200})
+        hll = SketchSpec("h", "hll", turn, {"p": 12})
+        cols, index = _dedup_projection([kll, hll, SketchSpec("h2", "hll", turn, {"p": 12})])
+        assert len(cols) == 2
+        assert index["k"] != index["h"] == index["h2"]
+
+        shared = build_sketches(corpus, [kll, hll])["h"]
+        exact = corpus.select("turn_idx").distinct().count()
+        assert abs(shared.estimate() - exact) <= 3 * shared.rel_error_bound() * exact
+        assert shared.to_bytes() == build_sketches(corpus, [hll])["h"].to_bytes()
 
     def test_dedup_projection_build_identity(self, spark, corpus):
         """Sketches built through a shared projected column are identical
@@ -244,6 +263,91 @@ def test_routed_blocked_cbf_build_equals_unrouted(spark, corpus):
     # retraction on the routed result: subtract the whole corpus -> empty
     empty = routed["c"].subtract(plain["c"])
     assert empty.net_insert_count() == 0
+
+
+class TestMergeShape:
+    """The tree merge runs its first level only for more than ``fanout``
+    partials per spec. One merge level and two must agree: Bloom, HLL and
+    CMS byte for byte, KLL and t-digest within their rank-error bounds
+    (their merge is order-sensitive by design)."""
+
+    SPECS = [
+        SketchSpec("b", "bloom", "text", {"m_bits": 1 << 18, "k": 4, "block_bits": 1 << 12}),
+        SketchSpec("h", "hll", "conv_id", {"p": 12}),
+        SketchSpec("c", "cms", "role", {"width": 1 << 10, "depth": 4}),
+        SketchSpec("k", "kll", "length(text)", {"k": 200}),
+        SketchSpec("t", "tdigest", "length(text)", {"delta": 200.0}),
+    ]
+
+    @staticmethod
+    def _merge_stages(merged) -> int:
+        # every level is one mapInArrow over the partial-build mapInArrow
+        return merged._jdf.queryExecution().optimizedPlan().toString().count("MapInArrow") - 1
+
+    @staticmethod
+    def _assert_same(one, two, lens):
+        for name in ("b", "h", "c"):
+            assert one[name].to_bytes() == two[name].to_bytes(), name
+        for name, eps in (("k", one["k"].rank_error_bound()), ("t", 0.02)):
+            for sk in (one[name], two[name]):
+                for q in (0.1, 0.5, 0.9):
+                    rank = np.searchsorted(lens, sk.quantile(q), side="right") / len(lens)
+                    assert abs(rank - q) <= 2 * eps, (name, q)
+
+    @pytest.fixture(scope="class")
+    def lens(self, corpus):
+        return np.sort([r[0] for r in corpus.selectExpr("length(text)").collect()])
+
+    def test_levels_follow_partial_count(self, spark, corpus):
+        from bloomfilter_multithread_spark.operators.build import _build_merged, _num_partials
+
+        specs = self.SPECS
+        assert self._merge_stages(_build_merged(corpus, specs, route_for="b",
+                                                route_partitions=8)) == 1
+        assert self._merge_stages(_build_merged(corpus, specs, fanout=4, route_for="b",
+                                                route_partitions=8)) == 2
+        assert self._merge_stages(_build_merged(corpus, specs, route_for="b",
+                                                route_partitions=32)) == 2
+        assert _num_partials(corpus, route_for="b") == spark.sparkContext.defaultParallelism
+        assert _num_partials(corpus, salt_partitions=5) == 5
+        assert self._merge_stages(_build_merged(corpus, specs, salt_partitions=5)) == 1
+        assert self._merge_stages(_build_merged(corpus, specs, salt_partitions=32)) == 2
+        # unrouted, unsalted: the count is decided at run time -> both levels
+        assert _num_partials(corpus) is None
+        assert self._merge_stages(_build_merged(corpus, specs)) == 2
+
+    def test_build_and_persist_one_vs_two_levels(self, spark, corpus, lens, tmp_path):
+        from bloomfilter_multithread_spark.operators.build import (
+            build_and_persist,
+            load_sketches,
+        )
+
+        def persisted(name, **kw):
+            path = str(tmp_path / name)
+            build_and_persist(corpus, self.SPECS, path, **kw)
+            return load_sketches(spark, path)
+
+        one = persisted("routed1", route_for="b", route_partitions=8)
+        self._assert_same(one, persisted("routed2", route_for="b",
+                                         route_partitions=8, fanout=4), lens)
+        self._assert_same(one, persisted("routed32", route_for="b",
+                                         route_partitions=32), lens)
+        self._assert_same(one, persisted("plain"), lens)
+        self._assert_same(one, persisted("plain4", fanout=4), lens)
+
+    def test_build_sketches_one_vs_two_levels(self, spark, corpus, lens):
+        # salt_partitions fixes P whatever the session's parallelism:
+        # 8 partials take one merge level, 32 take two
+        one = build_sketches(corpus, self.SPECS, salt_partitions=8)
+        self._assert_same(one, build_sketches(corpus, self.SPECS, salt_partitions=32), lens)
+        # tree_merge cannot see the partial count, so it runs both levels
+        # over the very partials build_sketches merges in one
+        self._assert_same(one, tree_merge(build_partials(corpus, self.SPECS,
+                                                         salt_partitions=8)), lens)
+        self._assert_same(one, build_sketches(corpus, self.SPECS), lens)
+        self._assert_same(one, build_sketches(corpus, self.SPECS, route_for="b"), lens)
+        self._assert_same(one, tree_merge(build_partials(corpus, self.SPECS,
+                                                         route_for="b")), lens)
 
 
 def test_runtime_filter_semijoin_injects_catalyst_bloom(spark, sf_dir):
